@@ -3,8 +3,9 @@
 Reference: loads ``PAC_3000.pkl`` once per batch (TESTING .py:76),
 predicts, prints metrics, persists nothing. Engine: load the
 checkpoint ONCE at attach time (the reference's per-batch reload is a
-bug-shaped inefficiency), transform each micro-batch declaratively,
-emit per-batch metrics to the console and an in-memory history.
+bug-shaped inefficiency), featurize each micro-batch with the
+trainer's ``BatchPlan`` and score it in one Spark job, emit per-batch
+metrics to the console and an in-memory history.
 """
 
 from __future__ import annotations
@@ -16,18 +17,34 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
 
-from ml_with_spark_streaming_spark.functions.metrics import binary_metrics
+from ml_with_spark_streaming_spark.functions.metrics import binary_metrics_from_cells
 from ml_with_spark_streaming_spark.ml.registry import ModelRegistry
-from ml_with_spark_streaming_spark.streaming.train import prepare_batch
-from ml_with_spark_streaming_spark.streaming.wire import parse_wire, split_quarantine
+from ml_with_spark_streaming_spark.streaming.train import (
+    BATCH_SHUFFLE_PARTITIONS,
+    BatchPlan,
+    batch_confs,
+    confusion_cells,
+)
 
 
 @dataclass
 class StreamingScorer:
+    """Scores every micro-batch with a frozen model.
+
+    Each batch is featurized by a ``BatchPlan`` built on the first
+    batch (the same plan the trainer uses, so wire lines and (label,
+    tweet) rows are both accepted and malformed records are
+    quarantined, not dropped) and scored in ONE Spark job by
+    ``BatchPlan.confusion_groups``, under the trainer's per-batch
+    shuffle settings (``batch_confs``). Every well-formed row is
+    scored: the metrics cover the whole batch, not the trainer's
+    held-out fifth. An empty batch writes no history row."""
+
     model: object
     stem: bool = False  # TESTING .py hashes unstemmed tokens (TESTING .py:60)
     num_features: int = 2500
     history: list[dict] = field(default_factory=list)
+    _plan: BatchPlan | None = field(default=None, init=False, repr=False)
 
     @classmethod
     def from_registry(cls, model: object, registry: ModelRegistry, key: str, best: bool = True, **kw) -> "StreamingScorer":
@@ -38,26 +55,16 @@ class StreamingScorer:
         return cls(model=model, **kw)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
+        if self._plan is None:
+            self._plan = BatchPlan(stem=self.stem, num_features=self.num_features)
+        with batch_confs(batch_df.sparkSession, BATCH_SHUFFLE_PARTITIONS):
+            groups = self._plan.confusion_groups(self.model, self._plan(batch_df))
+        if not groups:
             return
-        clean, quarantine = (
-            split_quarantine(parse_wire(batch_df)) if "value" in batch_df.columns else (batch_df, None)
-        )
-        # persist: row_id comes from monotonically_increasing_id, so the
-        # two sides of the prediction↔target join MUST evaluate the same
-        # materialization or ids could diverge (train.py does the same)
-        feats = prepare_batch(clean, stem=self.stem, num_features=self.num_features).persist()
-        try:
-            pred = self.model.predict(feats).join(
-                feats.select("row_id", "target").distinct(), "row_id"
-            )
-            m = binary_metrics(pred)
-            row = {"batch_id": batch_id, "batchsize": m.n, **m.as_row()}
-            if quarantine is not None:
-                row["quarantined"] = quarantine.count()
-            self.history.append(row)
-        finally:
-            feats.unpersist()
+        m = binary_metrics_from_cells(confusion_cells(groups, holdout_only=False))
+        row = {"batch_id": batch_id, "batchsize": m.n, **m.as_row()}
+        row["quarantined"] = sum(r["n"] for r in groups if r["_q"])
+        self.history.append(row)
 
     def attach(
         self, lines: DataFrame, trigger_seconds: int = 5, console: bool = False
