@@ -7,8 +7,8 @@ implementation, written from the published algorithm description
 (snowballstem.org/algorithms/english/stemmer.html — the public spec),
 not from any existing code base.
 
-Porter2 differs from the original 1980 Porter algorithm (kept in
-``functions/porter.py`` for comparison) in, among others:
+Porter2 differs from the original 1980 Porter algorithm in, among
+others:
 
 * exceptional forms (dying→die, news→news, proceed→proceed, …)
 * step-1a ies/ied → ie for short stems (ties→tie, not ti)

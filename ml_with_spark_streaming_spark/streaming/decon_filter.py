@@ -15,9 +15,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.lineage import maybe_checkpoint
 from ml_with_spark_streaming_spark.operators.decontaminate import (
@@ -27,11 +26,11 @@ from ml_with_spark_streaming_spark.operators.decontaminate import (
     multi_contamination_counts,
     tagged_eval_ngrams,
 )
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.flag_gate import FlagGate
 
 
 @dataclass
-class StreamingDecontaminationFilter:
+class StreamingDecontaminationFilter(FlagGate):
     """Reject documents overlapping the eval set, per micro-batch.
 
     ``on_kept`` receives each batch's clean slice; ``history`` records
@@ -48,6 +47,14 @@ class StreamingDecontaminationFilter:
     bench_names: list[str] | None = None
     on_kept: object = None
     history: list[dict] = field(default_factory=list)
+
+    keep_col = "keep"
+
+    @property
+    def history_keys(self) -> tuple[str, ...]:
+        return ("n_docs", "n_contaminated", "n_kept") + tuple(
+            f"docs_hit_{b}" for b in self.bench_names or ()
+        )
 
     @classmethod
     def from_eval_corpus(
@@ -105,15 +112,11 @@ class StreamingDecontaminationFilter:
         kw["n"] = int(p["n"])
         return cls(eval_grams=spark.read.parquet(f"{path}/grams"), **kw)
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def flag(self, batch_df: DataFrame) -> DataFrame:
         if self.bench_names is None:
             counts = contamination_counts(
                 batch_df, self.eval_grams, self.text_col, self.id_col, self.n
             )
-            keep_cols = [self.id_col, "keep"]
-            extra_aggs = []
         else:
             counts = multi_contamination_counts(
                 batch_df,
@@ -123,45 +126,11 @@ class StreamingDecontaminationFilter:
                 self.id_col,
                 self.n,
             )
-            keep_cols = [self.id_col, "keep"] + [
-                f"n_hit_{b}" for b in self.bench_names
-            ]
-            extra_aggs = [
-                F.sum((F.col(f"n_hit_{b}") > 0).cast("long")).alias(f"docs_hit_{b}")
-                for b in self.bench_names
-            ]
-        flagged = batch_df.join(counts.select(*keep_cols), self.id_col).persist()
-        try:
-            agg = flagged.agg(
-                F.count("*").alias("n"),
-                F.sum((F.col("keep") == 0).cast("long")).alias("dirty"),
-                *extra_aggs,
-            ).collect()[0]  # bounded-collect: single aggregate row
-            row = {
-                "batch_id": batch_id,
-                "n_docs": int(agg["n"]),
-                "n_contaminated": int(agg["dirty"] or 0),
-                "n_kept": int(agg["n"]) - int(agg["dirty"] or 0),
-            }
-            if self.bench_names is not None:
-                for b in self.bench_names:
-                    row[f"docs_hit_{b}"] = int(agg[f"docs_hit_{b}"] or 0)
-            self.history.append(row)
-            if self.on_kept is not None:
-                kept = flagged.filter("keep = 1").drop("keep")
-                for b in self.bench_names or []:
-                    kept = kept.drop(f"n_hit_{b}")
-                self.on_kept(kept, batch_id)
-        finally:
-            flagged.unpersist()
+        hits = [f"n_hit_{b}" for b in self.bench_names or ()]
+        return batch_df.join(counts.select(self.id_col, "keep", *hits), self.id_col)
 
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )
+    def extra_aggs(self) -> list[Column]:
+        return [F.sum((F.col("keep") == 0).cast("long")).alias("n_contaminated")] + [
+            F.sum((F.col(f"n_hit_{b}") > 0).cast("long")).alias(f"docs_hit_{b}")
+            for b in self.bench_names or ()
+        ]

@@ -26,10 +26,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.operators.dsir import dsir_score_against
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.flag_gate import FlagGate
 
 
 def freeze_weights(weights_df: DataFrame) -> list[tuple[int, int]]:
@@ -56,7 +55,7 @@ def weights_from_state(state: dict) -> list[tuple[int, int]]:
 
 
 @dataclass
-class StreamingDSIRFilter:
+class StreamingDSIRFilter(FlagGate):
     """Apply a frozen DSIR weight table to a document stream; keep
     docs whose total log importance weight is positive (more
     target-like than raw-corpus-like — q135's rule).
@@ -87,9 +86,7 @@ class StreamingDSIRFilter:
             self.weights or [(0, 0)], "bucket long, w6 long"
         )
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def flag(self, batch_df: DataFrame) -> DataFrame:
         scores = dsir_score_against(
             batch_df,
             self._weights_df(batch_df.sparkSession),
@@ -97,34 +94,6 @@ class StreamingDSIRFilter:
             id_col=self.id_col,
             n_buckets=self.n_buckets,
         ).select(self.id_col, "selected")
-        flagged = batch_df.join(scores, self.id_col, "left").withColumn(
+        return batch_df.join(scores, self.id_col, "left").withColumn(
             "_keep", F.coalesce(F.col("selected"), F.lit(0)) == 1
-        )
-        flagged = flagged.persist()
-        try:
-            agg = flagged.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("_keep").cast("long")).alias("kept"),
-            ).collect()[0]  # bounded-collect: single aggregate row
-            self.history.append(
-                {
-                    "batch_id": batch_id,
-                    "n_docs": int(agg["n"]),
-                    "n_kept": int(agg["kept"] or 0),
-                }
-            )
-            if self.on_kept is not None:
-                self.on_kept(flagged.filter("_keep").drop("_keep", "selected"), batch_id)
-        finally:
-            flagged.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
         )

@@ -81,7 +81,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.lineage import maybe_checkpoint
 from ml_with_spark_streaming_spark.operators.similarity import (
@@ -90,7 +89,7 @@ from ml_with_spark_streaming_spark.operators.similarity import (
     safe_denom,
     signlsh_bands,
 )
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 _VERIFY_MODES = ("broadcast", "join")
 
@@ -150,10 +149,13 @@ def _cosine_np(a, b) -> float:
 
 
 @dataclass
-class StreamingEmbeddingDedup:
+class StreamingEmbeddingDedup(ForeachBatchStage):
     """Per-micro-batch vector near-dup gate against the corpus
     signature index. ``on_kept`` receives each batch's accepted slice;
     ``history`` records (n_vecs / n_exact / n_near / n_kept)."""
+
+    history_keys = ("n_vecs", "n_exact", "n_near", "n_kept")
+    kept_key = "n_kept"
 
     corpus: DataFrame  # (id_col, vec_col) — the verify side
     band_index: DataFrame  # (id_col, band_idx, band_bits)
@@ -626,14 +628,3 @@ class StreamingEmbeddingDedup:
                 self.compact()
         if self.on_kept is not None:
             self.on_kept(kept, batch_id)
-
-    def attach(
-        self,
-        stream_df: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            stream_df, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

@@ -18,16 +18,15 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.operators.textstats import char_bigram_entropy
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.flag_gate import FlagGate
 
 
 @dataclass
-class StreamingEntropyFilter:
+class StreamingEntropyFilter(FlagGate):
     """Keep documents whose char-bigram entropy (micro-nats) is at
     least ``threshold_x1e6``. ``on_kept`` receives each batch's kept
     slice; ``history`` records per-batch totals for drift monitoring.
@@ -39,50 +38,20 @@ class StreamingEntropyFilter:
     on_kept: object = None
     history: list[dict] = field(default_factory=list)
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ent = char_bigram_entropy(batch_df, self.text_col, self.id_col)
-        flagged = (
-            batch_df.join(ent.select(self.id_col, "entropy_x1e6"), self.id_col, "left")
-            .withColumn(
-                # no-bigram docs (entropy NULL) are rejected, never kept
-                "_keep",
-                F.coalesce(
-                    F.col("entropy_x1e6") >= F.lit(int(self.threshold_x1e6)),
-                    F.lit(False),
-                ),
-            )
-            .persist()
-        )
-        try:
-            agg = flagged.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("_keep").cast("long")).alias("kept"),
-                F.sum(F.col("entropy_x1e6").isNull().cast("long")).alias("unscored"),
-            ).collect()[0]  # bounded-collect: single aggregate row
-            self.history.append(
-                {
-                    "batch_id": batch_id,
-                    "n_docs": int(agg["n"]),
-                    "n_kept": int(agg["kept"] or 0),
-                    "n_unscored": int(agg["unscored"] or 0),
-                }
-            )
-            if self.on_kept is not None:
-                self.on_kept(
-                    flagged.filter("_keep").drop("_keep", "entropy_x1e6"), batch_id
-                )
-        finally:
-            flagged.unpersist()
+    history_keys = ("n_docs", "n_kept", "n_unscored")
 
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
+    def flag(self, batch_df: DataFrame) -> DataFrame:
+        ent = char_bigram_entropy(batch_df, self.text_col, self.id_col)
+        return batch_df.join(
+            ent.select(self.id_col, "entropy_x1e6"), self.id_col, "left"
+        ).withColumn(
+            # no-bigram docs (entropy NULL) are rejected, never kept
+            "_keep",
+            F.coalesce(
+                F.col("entropy_x1e6") >= F.lit(int(self.threshold_x1e6)),
+                F.lit(False),
+            ),
         )
+
+    def extra_aggs(self) -> list[Column]:
+        return [F.sum(F.col("entropy_x1e6").isNull().cast("long")).alias("n_unscored")]

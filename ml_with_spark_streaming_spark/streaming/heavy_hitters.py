@@ -32,16 +32,15 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.functions.text import clean_text_expr, tokens_expr
 from ml_with_spark_streaming_spark.operators.dedup import shingles_expr
 from ml_with_spark_streaming_spark.operators.sketch import mg_candidates
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 
 @dataclass
-class StreamingHeavyHitters:
+class StreamingHeavyHitters(ForeachBatchStage):
     """k-bounded heavy-hitter state over a document stream."""
 
     k: int = 1023
@@ -109,15 +108,4 @@ class StreamingHeavyHitters:
         return sorted(
             ((g, c) for g, c in self.counters.items() if c > thr),
             key=lambda t: (-t[1], t[0]),
-        )
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
         )

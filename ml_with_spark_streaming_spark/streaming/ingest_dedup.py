@@ -31,9 +31,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 from ml_with_spark_streaming_spark.lineage import maybe_checkpoint
 from ml_with_spark_streaming_spark.operators.dedup import (
@@ -70,7 +69,7 @@ def build_corpus_index(
 
 
 @dataclass
-class StreamingIngestDedup:
+class StreamingIngestDedup(ForeachBatchStage):
     """Per-micro-batch dedup gate against the corpus index.
 
     Duplicates are caught across THREE scopes: vs the corpus index,
@@ -88,6 +87,9 @@ class StreamingIngestDedup:
     write-to-storage hook. ``history`` records per-batch totals
     (n_docs / n_exact / n_near / n_kept) for drift monitoring.
     """
+
+    history_keys = ("n_docs", "n_exact", "n_near", "n_kept")
+    kept_key = "n_kept"
 
     corpus: DataFrame
     fp_index: DataFrame
@@ -370,14 +372,3 @@ class StreamingIngestDedup:
                 flagged.unpersist()
         finally:
             batch_df.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

@@ -1,37 +1,43 @@
-"""The composed ingest pipeline: dedup -> decontaminate -> quality ->
-perplexity, per micro-batch — the full accept/reject path a production
-corpus runs at the door (novelty first, so later gates never score
-documents about to be discarded as duplicates; benchmark overlap
-second; the cheap classifier gate third; the LM perplexity gate last,
-on the smallest surviving slice; all gates are the EXACT batch
-operators, so stream verdicts equal batch verdicts).
+"""The composed ingest door: the gates a production corpus runs at
+write time, per micro-batch, as one stage list.
 
-Composes ``StreamingIngestDedup`` (q105's gates against the corpus
-fingerprint/band indexes), an optional ``StreamingEmbeddingDedup``
-(the semantic near-dup gate over a carried ``embedding`` column —
-runs right after text dedup, so a paraphrase that shares no shingle
-with the corpus is still caught by its vector), an optional
-``StreamingSegmentDedup``
-(q137's boilerplate REWRITE — runs right after document dedup so
-every later gate scores the text that would actually be stored),
-an optional ``StreamingSegmentQuality`` (q156's fine-grained quality
-REWRITE — cuts low-quality paragraphs right after the dedup rewrite,
-stateless), an optional ``StreamingDecontaminationFilter`` (q101's 13-gram eval
-overlap), ``StreamingQualityFilter`` (the frozen q112 weight table),
-an optional ``StreamingPerplexityFilter`` (the frozen q131 bigram
-LM), and an optional ``StreamingDSIRFilter`` (the frozen q135
-importance-resampling weight table — the distribution-match gate,
-last because it is the most selective), and an optional
-``StreamingANNIndexMaintainer`` AFTER acceptance (the serving-index
-stage: each batch's fully-accepted vectors — taken from the original
-batch, since the rewrite stages drop the vector column — are appended
-to the persisted IVF artifact, with drift-triggered refit when
-armed, so the ANN index a deployment probes always reflects exactly
-the accepted corpus). Each stage keeps its own
-per-batch history; the pipeline adds a combined ledger row per
-batch: (n_in, n_after_dedup, n_after_rewrite, n_after_decon,
-n_after_quality, n_accepted) — where n_accepted is whatever the LAST
-configured gate kept.
+Stage order (optional stages run only when configured): text dedup
+(``StreamingIngestDedup``, q105; novelty first, so no later gate
+scores a document about to be discarded) → embedding dedup
+(``StreamingEmbeddingDedup``; catches a paraphrase sharing no shingle
+with the corpus) → segment dedup (``StreamingSegmentDedup``, q137's
+boilerplate REWRITE, so every later gate scores the text that would be
+stored; rows are ``(id_col, text_col)`` from here on) → segment quality
+(``StreamingSegmentQuality``, q156's REWRITE) → decontamination (q101)
+→ quality (the frozen q112 weights; always configured) → perplexity
+(the frozen q131 bigram LM) → DSIR (q135, last: the most selective).
+Then ``StreamingANNIndexMaintainer`` appends the accepted ids' vectors,
+taken from the original batch because the rewrites drop the vector
+column, to the serving IVF artifact, and ``on_accepted`` gets the
+accepted slice. Every gate is the exact batch operator, so stream
+verdicts equal batch verdicts.
+
+The gate protocol: ``process_batch(df, batch_id)``, an ``on_kept``
+hook, a ``history`` that gains one row per batch, ``history_keys``
+(that row's keys) and ``kept_key`` (the key counting the rows handed
+to ``on_kept``). The runner walks the stage list recursively, and
+stage i + 1 runs INSIDE stage i's ``on_kept``. That continuation shape
+is deliberate: a gate keeps its scored frame persisted only while
+``on_kept`` runs, and text dedup grows its index after ``on_kept``
+returns, so a runner that took each kept slice back and ran the next
+gate afterwards would recompute the dedup plan (75-85% of a batch) for
+every downstream action. The runner's one piece of per-stage knowledge
+is the embedding gate's hand-off of ``(id, vec)`` rows, semi-joined
+back to the document rows by id.
+
+A stage whose upstream gate kept 0 rows (read off that gate's new
+history row, no Spark job) does not run; it records an all-zero row
+under its own ``history_keys``, so every history stays index-aligned
+with the ledger. The ledger row per batch (``n_in``, an ``n_after_*``
+column per ledger stage, ``n_accepted``) is read off the histories;
+an unconfigured stage's column repeats the count before it, so the
+funnel never increases. A user hook already on a stage's ``on_kept``
+is still called with its kept slice before the door moves on.
 """
 
 from __future__ import annotations
@@ -40,7 +46,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.streaming.ann_index_maintainer import (
     StreamingANNIndexMaintainer,
@@ -52,7 +57,7 @@ from ml_with_spark_streaming_spark.streaming.dsir_filter import StreamingDSIRFil
 from ml_with_spark_streaming_spark.streaming.embedding_dedup_filter import (
     StreamingEmbeddingDedup,
 )
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 from ml_with_spark_streaming_spark.streaming.ingest_dedup import StreamingIngestDedup
 from ml_with_spark_streaming_spark.streaming.perplexity_filter import (
     StreamingPerplexityFilter,
@@ -67,9 +72,8 @@ from ml_with_spark_streaming_spark.streaming.segment_quality_filter import (
 
 
 @dataclass
-class StreamingIngestPipeline:
-    """Chain the dedup, (optional) decontamination, quality, and
-    (optional) perplexity gates over one document stream.
+class StreamingIngestPipeline(ForeachBatchStage):
+    """Run the door's configured gates over one document stream.
 
     ``on_accepted`` receives each batch's fully-accepted slice (novel,
     clean of eval overlap, high-quality, AND in-distribution under the
@@ -96,20 +100,6 @@ class StreamingIngestPipeline:
     batch_partitions: int | None = 8
     on_accepted: object = None
     ledger: list[dict] = field(default_factory=list)
-
-    def __post_init__(self) -> None:
-        # the pipeline drives the stages through their on_kept hooks;
-        # user-supplied stage hooks are preserved and still called
-        self._dedup_hook = self.dedup.on_kept
-        self._emb_hook = self.embdedup.on_kept if self.embdedup is not None else None
-        self._seg_hook = self.segdedup.on_kept if self.segdedup is not None else None
-        self._segq_hook = (
-            self.segquality.on_kept if self.segquality is not None else None
-        )
-        self._decon_hook = self.decon.on_kept if self.decon is not None else None
-        self._quality_hook = self.quality.on_kept
-        self._ppl_hook = self.perplexity.on_kept if self.perplexity is not None else None
-        self._dsir_hook = self.dsir.on_kept if self.dsir is not None else None
 
     @classmethod
     def build(
@@ -439,14 +429,20 @@ class StreamingIngestPipeline:
         pipe.ledger.extend(m["ledger"])
         return pipe
 
-    @staticmethod
-    def _zero_row(history: list[dict], batch_id: int, keys: tuple[str, ...]) -> None:
-        """Keep stage histories aligned with the ledger when an
-        upstream gate rejects a whole batch: the downstream stage
-        never ran, so record an explicit all-zero row for the batch
-        instead of silently skipping it (monitors that align stage
-        histories by index would otherwise read the wrong batch)."""
-        history.append({"batch_id": batch_id, **{k: 0 for k in keys}})
+    def _slots(self) -> list[tuple[object, str | None]]:
+        """Every stage in door order with the ledger column recording
+        its kept count (None: the stage has no column of its own).
+        Unconfigured stages are None."""
+        return [
+            (self.dedup, "n_after_dedup"),
+            (self.embdedup, "n_after_embdedup"),
+            (self.segdedup, "n_after_rewrite"),
+            (self.segquality, "n_after_segquality"),
+            (self.decon, "n_after_decon"),
+            (self.quality, "n_after_quality"),
+            (self.perplexity, None),
+            (self.dsir, None),
+        ]
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -455,199 +451,54 @@ class StreamingIngestPipeline:
             batch_df = batch_df.coalesce(self.batch_partitions).localCheckpoint(
                 eager=True
             )
+        slots = self._slots()
+        stages = [stage for stage, _ in slots if stage is not None]
 
-        def _after_dedup(kept_df: DataFrame, bid: int) -> None:
-            if self._dedup_hook is not None:
-                self._dedup_hook(kept_df, bid)
-            if self.embdedup is None:
-                _after_emb(kept_df, bid, ran_emb=False)
-            elif kept_df.isEmpty():
-                self._zero_row(
-                    self.embdedup.history,
-                    bid,
-                    ("n_vecs", "n_exact", "n_near", "n_kept"),
+        def _run(i: int, df: DataFrame, bid: int) -> None:
+            if i == len(stages):
+                self._accept(batch_df, df, bid)
+                return
+            stage = stages[i]
+            if i > 0 and stages[i - 1].history[-1][stages[i - 1].kept_key] == 0:
+                stage.history.append(
+                    {"batch_id": bid, **dict.fromkeys(stage.history_keys, 0)}
                 )
-                _after_emb(kept_df, bid, ran_emb=False)
-            else:
-                # the embedding gate emits its kept (id, vec) slice;
-                # map back to the full doc rows by id (the stream must
-                # carry the vec column when this stage is configured)
-                idc = self.embdedup.id_col
+                _run(i + 1, df, bid)
+                return
+            hook = stage.on_kept
 
-                def _emb_done(kept_vecs: DataFrame, b: int) -> None:
-                    _after_emb(
-                        kept_df.join(kept_vecs.select(idc), idc, "semi"), b
-                    )
+            def on_kept(kept_df: DataFrame, b: int) -> None:
+                if stage is self.embdedup:
+                    idc = stage.id_col
+                    kept_df = df.join(kept_df.select(idc), idc, "semi")
+                if hook is not None:
+                    hook(kept_df, b)
+                _run(i + 1, kept_df, b)
 
-                self.embdedup.on_kept = _emb_done
-                self.embdedup.process_batch(kept_df, bid)
+            stage.on_kept = on_kept
+            try:
+                stage.process_batch(df, bid)
+            finally:
+                stage.on_kept = hook
 
-        def _after_emb(kept_df: DataFrame, bid: int, ran_emb: bool = True) -> None:
-            if ran_emb and self._emb_hook is not None:
-                self._emb_hook(kept_df, bid)
-            if self.segdedup is None:
-                _after_seg(kept_df, bid, ran_seg=False)
-            elif kept_df.isEmpty():
-                self._zero_row(
-                    self.segdedup.history,
-                    bid,
-                    ("n_docs", "n_segs", "n_cut", "n_docs_kept"),
-                )
-                _after_seg(kept_df, bid, ran_seg=False)
-            else:
-                self.segdedup.on_kept = _after_seg
-                self.segdedup.process_batch(kept_df, bid)
+        _run(0, batch_df, batch_id)
+        n = self.dedup.history[-1]["n_docs"]
+        row = {"batch_id": batch_id, "n_in": n}
+        for stage, col in slots:
+            if stage is not None:
+                n = stage.history[-1][stage.kept_key]
+            if col is not None:
+                row[col] = n
+        row["n_accepted"] = n
+        self.ledger.append(row)
 
-        def _after_seg(kept_df: DataFrame, bid: int, ran_seg: bool = True) -> None:
-            # the rewrite stage emits (id_col, text_col) only — the
-            # surviving text IS the document from here on
-            if ran_seg and self._seg_hook is not None:
-                self._seg_hook(kept_df, bid)
-            if self.segquality is None:
-                _after_segq(kept_df, bid, ran_segq=False)
-            elif kept_df.isEmpty():
-                self._zero_row(
-                    self.segquality.history,
-                    bid,
-                    ("n_docs", "n_segs", "n_cut", "n_docs_kept"),
-                )
-                _after_segq(kept_df, bid, ran_segq=False)
-            else:
-                self.segquality.on_kept = _after_segq
-                self.segquality.process_batch(kept_df, bid)
-
-        def _after_segq(kept_df: DataFrame, bid: int, ran_segq: bool = True) -> None:
-            if ran_segq and self._segq_hook is not None:
-                self._segq_hook(kept_df, bid)
-            if self.decon is not None:
-                if kept_df.isEmpty():
-                    self._zero_row(
-                        self.decon.history, bid, ("n_docs", "n_contaminated", "n_kept")
-                    )
-                    _after_decon(kept_df, bid, ran_decon=False)
-                else:
-                    self.decon.on_kept = _after_decon
-                    self.decon.process_batch(kept_df, bid)
-            else:
-                _after_decon(kept_df, bid, ran_decon=False)
-
-        def _after_decon(clean_df: DataFrame, bid: int, ran_decon: bool = True) -> None:
-            if ran_decon and self._decon_hook is not None:
-                self._decon_hook(clean_df, bid)
-            if clean_df.isEmpty():
-                self._zero_row(self.quality.history, bid, ("n_docs", "n_kept"))
-                _after_quality(clean_df, bid, ran_quality=False)
-            else:
-                self.quality.on_kept = _after_quality
-                self.quality.process_batch(clean_df, bid)
-
-        def _after_quality(
-            accepted_df: DataFrame, bid: int, ran_quality: bool = True
-        ) -> None:
-            if ran_quality and self._quality_hook is not None:
-                self._quality_hook(accepted_df, bid)
-            if self.perplexity is None:
-                _after_ppl(accepted_df, bid, ran_ppl=False)
-            elif accepted_df.isEmpty():
-                self._zero_row(
-                    self.perplexity.history,
-                    bid,
-                    ("n_docs", "n_kept", "n_unscored"),
-                )
-                _after_ppl(accepted_df, bid, ran_ppl=False)
-            else:
-                self.perplexity.on_kept = _after_ppl
-                self.perplexity.process_batch(accepted_df, bid)
-
-        def _after_ppl(final_df: DataFrame, bid: int, ran_ppl: bool = True) -> None:
-            if ran_ppl and self._ppl_hook is not None:
-                self._ppl_hook(final_df, bid)
-            if self.dsir is None:
-                _after_dsir(final_df, bid, ran_dsir=False)
-            elif final_df.isEmpty():
-                self._zero_row(self.dsir.history, bid, ("n_docs", "n_kept"))
-                _after_dsir(final_df, bid, ran_dsir=False)
-            else:
-                self.dsir.on_kept = _after_dsir
-                self.dsir.process_batch(final_df, bid)
-
-        def _after_dsir(final_df: DataFrame, bid: int, ran_dsir: bool = True) -> None:
-            if ran_dsir and self._dsir_hook is not None:
-                self._dsir_hook(final_df, bid)
-            if self.ann_maintainer is not None:
-                # serving-index stage: the ACCEPTED ids' vectors, taken
-                # from the ORIGINAL batch (the rewrite stages drop the
-                # vector column), appended to the IVF artifact
-                idc = self.ann_maintainer.id_col
-                vecs = batch_df.select(idc, self.ann_maintainer.vec_col).join(
-                    F.broadcast(final_df.select(idc)), idc, "semi"
-                )
-                self.ann_maintainer.process_batch(vecs, bid)
-            if self.on_accepted is not None:
-                self.on_accepted(final_df, bid)
-
-        self.dedup.on_kept = _after_dedup
-        self.dedup.process_batch(batch_df, batch_id)
-        # the ledger is derived from the stage histories (each stage
-        # already counted its batch) — no extra Spark actions
-        dh = self.dedup.history[-1]
-        emb_h = (
-            self.embdedup.history[-1]
-            if self.embdedup is not None and self.embdedup.history
-            else None
-        )
-        n_after_emb = emb_h["n_kept"] if emb_h is not None else dh["n_kept"]
-        gh = (
-            self.segdedup.history[-1]
-            if self.segdedup is not None and self.segdedup.history
-            else None
-        )
-        # fall back to the EMBEDDING stage's count (not the text-dedup
-        # count): when embdedup is configured but segdedup is not, the
-        # rewrite column must reflect what later stages actually saw,
-        # or the ledger funnel goes non-monotonic
-        n_after_rewrite = gh["n_docs_kept"] if gh is not None else n_after_emb
-        sqh = (
-            self.segquality.history[-1]
-            if self.segquality is not None and self.segquality.history
-            else None
-        )
-        n_after_segq = sqh["n_docs_kept"] if sqh is not None else n_after_rewrite
-        ch = self.decon.history[-1] if self.decon is not None else None
-        qh = self.quality.history[-1] if self.quality.history else None
-        n_after_quality = qh["n_kept"] if qh is not None else 0
-        ph = (
-            self.perplexity.history[-1]
-            if self.perplexity is not None and self.perplexity.history
-            else None
-        )
-        n_after_ppl = ph["n_kept"] if ph is not None else n_after_quality
-        sh = (
-            self.dsir.history[-1]
-            if self.dsir is not None and self.dsir.history
-            else None
-        )
-        self.ledger.append(
-            {
-                "batch_id": batch_id,
-                "n_in": dh["n_docs"],
-                "n_after_dedup": dh["n_kept"],
-                "n_after_embdedup": n_after_emb,
-                "n_after_rewrite": n_after_rewrite,
-                "n_after_segquality": n_after_segq,
-                "n_after_decon": ch["n_kept"] if ch is not None else n_after_segq,
-                "n_after_quality": n_after_quality,
-                "n_accepted": sh["n_kept"] if sh is not None else n_after_ppl,
-            }
-        )
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )
+    def _accept(self, batch_df: DataFrame, final_df: DataFrame, bid: int) -> None:
+        if self.ann_maintainer is not None:
+            # the ACCEPTED ids' vectors, taken from the ORIGINAL batch
+            idc = self.ann_maintainer.id_col
+            vecs = batch_df.select(idc, self.ann_maintainer.vec_col).join(
+                F.broadcast(final_df.select(idc)), idc, "semi"
+            )
+            self.ann_maintainer.process_batch(vecs, bid)
+        if self.on_accepted is not None:
+            self.on_accepted(final_df, bid)

@@ -23,9 +23,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.lineage import maybe_checkpoint
 from ml_with_spark_streaming_spark.operators.lm import (
@@ -33,7 +32,7 @@ from ml_with_spark_streaming_spark.operators.lm import (
     score_against_lm,
 )
 from ml_with_spark_streaming_spark.functions.text import clean_text_expr, tokens_expr
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.flag_gate import FlagGate
 
 
 def train_lm(
@@ -51,7 +50,7 @@ def train_lm(
 
 
 @dataclass
-class StreamingPerplexityFilter:
+class StreamingPerplexityFilter(FlagGate):
     """Apply a frozen bigram LM to a document stream; keep docs whose
     per-bigram mean NLL is at or below the threshold (micro-nats).
 
@@ -68,6 +67,8 @@ class StreamingPerplexityFilter:
     keep_unscored: bool = True
     on_kept: object = None
     history: list[dict] = field(default_factory=list)
+
+    history_keys = ("n_docs", "n_kept", "n_unscored")
 
     @classmethod
     def from_corpus(
@@ -105,49 +106,13 @@ class StreamingPerplexityFilter:
             batch_df, self.uni, self.big, self.vocab, self.text_col, self.id_col
         )
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        scores = self.score_batch(batch_df)
+    def flag(self, batch_df: DataFrame) -> DataFrame:
         keep = F.when(
             F.col("n_bigrams") == 0, F.lit(self.keep_unscored)
         ).otherwise(F.col("mean_nll_x1e6") <= F.lit(self.threshold_x1e6))
-        flagged = (
-            batch_df.join(scores, self.id_col)
-            .withColumn("_keep", keep)
-            .persist()
+        return batch_df.join(self.score_batch(batch_df), self.id_col).withColumn(
+            "_keep", keep
         )
-        try:
-            agg = flagged.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("_keep").cast("long")).alias("kept"),
-                F.sum((F.col("n_bigrams") == 0).cast("long")).alias("unscored"),
-            ).collect()[0]  # bounded-collect: single aggregate row
-            self.history.append(
-                {
-                    "batch_id": batch_id,
-                    "n_docs": int(agg["n"]),
-                    "n_kept": int(agg["kept"] or 0),
-                    "n_unscored": int(agg["unscored"] or 0),
-                }
-            )
-            if self.on_kept is not None:
-                self.on_kept(
-                    flagged.filter("_keep").drop(
-                        "_keep", "n_bigrams", "nll_x1e6", "mean_nll_x1e6"
-                    ),
-                    batch_id,
-                )
-        finally:
-            flagged.unpersist()
 
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )
+    def extra_aggs(self) -> list[Column]:
+        return [F.sum((F.col("n_bigrams") == 0).cast("long")).alias("n_unscored")]

@@ -12,7 +12,7 @@ numpy), each micro-batch is scored with the identical broadcast-join
 plan the batch query uses, and per-batch keep stats accumulate for
 monitoring.
 
-Batch/stream parity is structural: ``process_batch`` calls the same
+Batch/stream parity is structural: ``flag`` calls the same
 ``feature_presence`` → ``classifier_scores`` operators as q112, so the
 stream's verdict on any document equals the batch engine's verdict on
 the same rows (pinned by ``tests/test_quality_filter_stream.py``).
@@ -24,14 +24,12 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
 
 from ml_with_spark_streaming_spark.operators.quality_clf import (
     classifier_scores,
     feature_presence,
 )
+from ml_with_spark_streaming_spark.streaming.flag_gate import FlagGate
 
 
 def freeze_weights(weights_df: DataFrame) -> list[tuple[str, int]]:
@@ -58,7 +56,7 @@ def weights_from_state(state: dict) -> list[tuple[str, int]]:
 
 
 @dataclass
-class StreamingQualityFilter:
+class StreamingQualityFilter(FlagGate):
     """Apply a frozen quality-classifier weight table to a document
     stream; keep docs with positive score.
 
@@ -87,37 +85,9 @@ class StreamingQualityFilter:
     def _weights_df(self, spark) -> DataFrame:
         return spark.createDataFrame(self.weights or [("", 0)], "fb string, w long")
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def flag(self, batch_df: DataFrame) -> DataFrame:
         pres = feature_presence(batch_df, self.text_col, self.id_col)
         scores = classifier_scores(pres, self._weights_df(batch_df.sparkSession), self.id_col)
-        flagged = (
-            batch_df.join(scores, self.id_col, "left")
-            .withColumn("_keep", F.coalesce(F.col("score"), F.lit(0)) > 0)
-        )
-        # one pass for the stats; the kept slice re-filters the same
-        # cached lineage
-        flagged = flagged.persist()
-        try:
-            agg = flagged.agg(
-                F.count("*").alias("n"), F.sum(F.col("_keep").cast("long")).alias("kept")
-            ).collect()[0]  # bounded-collect: single aggregate row
-            self.history.append(
-                {"batch_id": batch_id, "n_docs": int(agg["n"]), "n_kept": int(agg["kept"] or 0)}
-            )
-            if self.on_kept is not None:
-                self.on_kept(flagged.filter("_keep").drop("_keep", "score"), batch_id)
-        finally:
-            flagged.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
+        return batch_df.join(scores, self.id_col, "left").withColumn(
+            "_keep", F.coalesce(F.col("score"), F.lit(0)) > 0
         )

@@ -35,14 +35,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.lineage import maybe_checkpoint
 from ml_with_spark_streaming_spark.operators.segment_dedup import (
     DEFAULT_WIDTH,
     segment_table,
 )
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 
 def _seg_hash(para: Column) -> Column:
@@ -63,11 +62,14 @@ def build_segment_index(
 
 
 @dataclass
-class StreamingSegmentDedup:
+class StreamingSegmentDedup(ForeachBatchStage):
     """Per-micro-batch segment-level rewrite against the corpus
     segment-hash index. ``on_kept`` receives the REWRITTEN documents
     (original id, surviving text) — fully-boilerplate docs are dropped.
     History rows: (batch_id, n_docs, n_segs, n_cut, n_docs_kept)."""
+
+    history_keys = ("n_docs", "n_segs", "n_cut", "n_docs_kept")
+    kept_key = "n_docs_kept"
 
     seg_index: DataFrame
     width: int = DEFAULT_WIDTH
@@ -197,14 +199,3 @@ class StreamingSegmentDedup:
                 self.on_kept(kept_docs, batch_id)
         finally:
             docs.unpersist()
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

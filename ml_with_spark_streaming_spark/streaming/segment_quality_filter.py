@@ -21,21 +21,23 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ml_with_spark_streaming_spark.operators.segment_dedup import (
     DEFAULT_WIDTH,
     segment_quality_rewrite,
 )
-from ml_with_spark_streaming_spark.streaming.foreach import attach_foreach_batch
+from ml_with_spark_streaming_spark.streaming.foreach import ForeachBatchStage
 
 
 @dataclass
-class StreamingSegmentQuality:
+class StreamingSegmentQuality(ForeachBatchStage):
     """Per-micro-batch segment-quality rewrite. ``on_kept`` receives
     the REWRITTEN documents (original id, surviving text); docs with
     no passing segment are dropped. History rows:
     (batch_id, n_docs, n_segs, n_cut, n_docs_kept)."""
+
+    history_keys = ("n_docs", "n_segs", "n_cut", "n_docs_kept")
+    kept_key = "n_docs_kept"
 
     width: int = DEFAULT_WIDTH
     threshold_x100: int = 67
@@ -77,14 +79,3 @@ class StreamingSegmentQuality:
                 F.col("text_kept").alias(self.text_col),
             )
             self.on_kept(kept, batch_id)
-
-    def attach(
-        self,
-        docs: DataFrame,
-        checkpoint: str | None = None,
-        trigger_seconds: int = 5,
-        available_now: bool = False,
-    ) -> StreamingQuery:
-        return attach_foreach_batch(
-            docs, self.process_batch, checkpoint, trigger_seconds, available_now
-        )

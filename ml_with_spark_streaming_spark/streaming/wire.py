@@ -116,10 +116,3 @@ def parse_jsonl(lines: DataFrame, value_col: str = "value") -> DataFrame:
         # that parsed but lacks `text` is just as unrecoverable without it
         F.when(F.col("r").isNull() | F.col("r.text").isNull(), F.col("raw")).alias("raw"),
     )
-
-
-def split_quarantine(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined) — clean rows drop the error/raw columns."""
-    clean = parsed.filter(F.col("error").isNull()).select("label", "tweet")
-    quarantined = parsed.filter(F.col("error").isNotNull())
-    return clean, quarantined

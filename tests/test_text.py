@@ -5,7 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ml_with_spark_streaming_spark.functions.porter import porter_stem
 from ml_with_spark_streaming_spark.functions.snowball import snowball_stem
 from ml_with_spark_streaming_spark.functions.text import (
     clean_text_expr,
@@ -112,14 +111,6 @@ def test_stopword_removal(spark):
     assert out == ["cat", "dog"]
 
 
-def test_porter_stem_basics():
-    assert porter_stem("caresses") == "caress"
-    assert porter_stem("ponies") == "poni"
-    assert porter_stem("running") == "run"
-    assert porter_stem("agreed") == "agre"
-    assert porter_stem("cats") == "cat"
-
-
 # NLTK SnowballStemmer("english") goldens, hand-derived from the
 # published Porter2 spec (snowballstem.org/algorithms/english) — the
 # reference pipeline's stemmer (PAC/passiveAgressiveModel.py:64-66).
@@ -159,9 +150,9 @@ def test_snowball_stem_goldens():
 
 
 def test_snowball_diverges_from_porter_where_specified():
-    """The round-1 engine shipped original Porter; the reference uses
-    Snowball. Pin the words where the two algorithms MUST differ so a
-    regression back to Porter semantics is loud."""
+    """The reference uses Snowball, not the original Porter algorithm.
+    Pin the words where the two algorithms MUST differ (Porter's stem
+    in each comment) so a regression to Porter semantics is loud."""
     for word, expected in {
         "dying": "die",      # Porter: dy
         "news": "news",      # Porter: new
@@ -174,7 +165,6 @@ def test_snowball_diverges_from_porter_where_specified():
         "communication": "communic",  # Porter: commun
     }.items():
         assert snowball_stem(word) == expected
-        assert porter_stem(word) != expected
 
 
 def test_stem_udf_matches_python(spark):

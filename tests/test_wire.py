@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import json
 
-from ml_with_spark_streaming_spark.streaming.wire import parse_jsonl, parse_wire, split_quarantine
+from pyspark.sql import functions as F
+
+from ml_with_spark_streaming_spark.streaming.wire import parse_jsonl, parse_wire
 
 
 def test_parse_wire_happy_path(spark):
@@ -24,9 +26,10 @@ def test_parse_wire_first_comma_only(spark):
 
 def test_parse_wire_quarantines_bad_json(spark):
     df = spark.createDataFrame([("not json at all",), (json.dumps(["4,ok"]),)], "value string")
-    clean, quarantined = split_quarantine(parse_wire(df))
+    parsed = parse_wire(df)
+    clean = parsed.filter(F.col("error").isNull())
     assert [(r["label"], r["tweet"]) for r in clean.collect()] == [("4", "ok")]
-    q = quarantined.collect()
+    q = parsed.filter(F.col("error").isNotNull()).collect()
     assert len(q) == 1 and q[0]["error"] == "bad_json" and q[0]["raw"] == "not json at all"
 
 
@@ -42,6 +45,7 @@ def test_parse_jsonl(spark):
     df = spark.createDataFrame(
         [('{"label": "4", "text": "nice"}',), ("broken {",)], "value string"
     )
-    clean, quarantined = split_quarantine(parse_jsonl(df))
+    parsed = parse_jsonl(df)
+    clean = parsed.filter(F.col("error").isNull())
     assert [(r["label"], r["tweet"]) for r in clean.collect()] == [("4", "nice")]
-    assert quarantined.count() == 1
+    assert parsed.filter(F.col("error").isNotNull()).count() == 1
